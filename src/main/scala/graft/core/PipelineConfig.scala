@@ -34,7 +34,17 @@ final case class PipelineConfig(
     // The reference keeps per-key state forever (no Flink state TTL); on a
     // long-running stream that is unbounded growth across dead keys, so the
     // Spark port adds a retention ladder: idle flush -> retention -> remove.
-    idleRetentionMillis: Option[Long] = None)
+    idleRetentionMillis: Option[Long] = None) {
+  // each of these would only fail once the stream runs: a zero emit cadence
+  // or window width divides by zero in the operator and kills the query, a
+  // non-positive timeout is refused by GroupState on the first batch, and a
+  // zero-step forecast fails every fit, so no baseline is ever emitted
+  require(emitEveryN >= 1, s"emitEveryN must be >= 1, got $emitEveryN")
+  require(forecastSteps >= 1, s"forecastSteps must be >= 1, got $forecastSteps")
+  require(windowMillis > 0, s"windowMillis must be > 0, got $windowMillis")
+  require(idleFlushMillis.forall(_ > 0), s"idleFlushMillis must be > 0, got $idleFlushMillis")
+  require(idleRetentionMillis.forall(_ > 0), s"idleRetentionMillis must be > 0, got $idleRetentionMillis")
+}
 
 object PipelineConfig {
 

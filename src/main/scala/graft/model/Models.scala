@@ -102,17 +102,6 @@ object NodeState {
   val empty: NodeState = NodeState(Vector.empty, Vector.empty, 0, 0L, 0.0, 0.0)
 }
 
-/** Union envelope for the alert operator's two inputs (the reference's
-  * broadcast+keyed two-input operator, flinkarima.py:284-376, expressed as a
-  * single keyed stream in Spark).
-  */
-final case class BaselineOrAggregate(
-    nodeId: String,
-    eventTime: Long,
-    isBaseline: Boolean,
-    aggregate: Option[WindowAggregate],
-    baseline: Option[Baseline])
-
 /** Output envelope of the fused streaming pipeline: the reference emits both
   * baselines and alerts as JSON strings to stdout (flinkarima.py:471-474).
   */

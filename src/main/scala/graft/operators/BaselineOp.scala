@@ -5,19 +5,15 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.core.PipelineConfig
 import graft.model.{Baseline, NodeState, WindowAggregate}
 import graft.ts.{DailyTrend, SarimaxLite, Welford}
 
-/** Per-key stateful SARIMAX baseline operator (O6/O7,
-  * /root/reference/src/flinkarima.py:145-258).
-  *
-  * Spark-native form: `groupByKey(_.nodeId).flatMapGroupsWithState` carrying
-  * [[NodeState]] — the idiomatic "UDF with state", co-partitioned by key, so
-  * state scales with key cardinality across executors (RocksDB state store
-  * provider at production scale).
+/** The SARIMAX baseline kernel (O6/O7, flinkarima.py:145-258 in the
+  * reference): [[step]] takes one key's state and one closed window to the
+  * next state and, on the emit cadence, a baseline. The streaming operator
+  * that carries the state is [[NodePipeline]].
   *
   * Exact reference semantics preserved per element:
   *   1. z-score the sample with the PRE-update Welford stats (:194-198);
@@ -27,31 +23,27 @@ import graft.ts.{DailyTrend, SarimaxLite, Welford}
   *      wraps AND history >= minHistory (:218-223);
   *   5. fit failures are logged and swallowed (:257-258).
   *
-  * Micro-batch note: elements of one batch are processed in event-time order
-  * (the reference processes in arrival order; SURVEY §7.4.2).
+  * Ordering note: each key's elements are folded in event-time order (the
+  * reference processes in arrival order; SURVEY §7.4.2).
   */
 object BaselineOp extends Logging {
 
+  /** Batch replay: each key's aggregates, sorted by event time, folded
+    * through [[step]] from the empty state.
+    */
   def apply(aggregates: Dataset[WindowAggregate], cfg: PipelineConfig): Dataset[Baseline] = {
     import aggregates.sparkSession.implicits._
     aggregates
       .groupByKey(_.nodeId)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(processGroup(cfg) _)
-  }
-
-  def processGroup(cfg: PipelineConfig)(
-      key: String,
-      rows: Iterator[WindowAggregate],
-      state: GroupState[NodeState]): Iterator[Baseline] = {
-    var st = state.getOption.getOrElse(NodeState.empty)
-    val out = ArrayBuffer.empty[Baseline]
-    rows.toArray.sortBy(_.eventTime).foreach { aggRow =>
-      val (next, emitted) = step(cfg, st, aggRow)
-      st = next
-      emitted.foreach(out += _)
-    }
-    state.update(st)
-    out.iterator
+      .flatMapGroups { (_, rows) =>
+        val out = ArrayBuffer.empty[Baseline]
+        rows.toArray.sortBy(_.eventTime).foldLeft(NodeState.empty) { (st, aggRow) =>
+          val (next, emitted) = step(cfg, st, aggRow)
+          out ++= emitted
+          next
+        }
+        out.iterator
+      }
   }
 
   /** One reference `process_element` step: (state, aggregate) -> (state', baseline?). */

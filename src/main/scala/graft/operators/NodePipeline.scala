@@ -9,16 +9,28 @@ import graft.core.PipelineConfig
 import graft.model._
 
 /** Fused per-key streaming pipeline: tumbling-window aggregation + SARIMAX
-  * baseline + latest-baseline alerting in ONE keyed stateful operator.
+  * baseline + latest-baseline alerting in ONE keyed stateful operator — the
+  * only streaming form of the paper's operator. [[BaselineOp.step]] and
+  * [[AlertOp.check]] are its kernels.
   *
   * Why fused: Structured Streaming allows at most one
   * `flatMapGroupsWithState` stage per streaming query (and none after a
   * streaming aggregation), and every stage of the reference job
-  * (/root/reference/src/flinkarima.py:392-476) is keyed by the same
-  * `node_id` — the dataflow is logically one keyed pipeline (the broadcast
-  * edge is a Flink API artifact, see [[AlertOp]]). Fusing gives a single
-  * shuffle on `node_id` and a single state store — less data movement than
-  * the reference's two hash exchanges + broadcast.
+  * (flinkarima.py:392-476) is keyed by the same `node_id` — the dataflow is
+  * logically one keyed pipeline. Fusing gives a single shuffle on `node_id`
+  * and a single state store — less data movement than the reference's two
+  * hash exchanges + broadcast.
+  *
+  * Co-partitioning instead of broadcast: the reference physically broadcasts
+  * every baseline to all alert instances and keeps a `node_id -> latest
+  * baseline` map in broadcast state (flinkarima.py:284-376). That is a Flink
+  * API artifact: baselines and aggregates are keyed by the SAME key, so this
+  * key's latest baseline sits in its own keyed state (SURVEY §7.5.2).
+  *
+  * Alert against the PREVIOUS baseline: in the reference the raw path is one
+  * map shorter than the SARIMAX path, so a window aggregate is alerted
+  * against the baseline before the one it itself triggers. A closing window
+  * is therefore checked first and stepped through the model second.
   *
   * Window semantics: event-time tumbling windows. A window for a key is
   * finalized either by a later-window record for that key (zero-lateness
@@ -27,12 +39,8 @@ import graft.model._
   * processing-time idle timeout of `windowMillis`, so a node that goes
   * quiet still emits its last window (and can still alert: a dead node is
   * exactly the case alerting exists for). Records at or before an already
-  * finalized window are dropped.
-  *
-  * The modular [[WindowAgg]] + [[BaselineOp]] + [[AlertOp]] operators remain
-  * available for batch analytics; under Structured Streaming each stateful
-  * stage would need its own query with an intermediate sink — the fused form
-  * is the single-query streaming path.
+  * finalized window are dropped. A micro-batch's records are taken in
+  * event-time order (the reference takes arrival order; SURVEY §7.4.2).
   */
 object NodePipeline {
 
@@ -54,8 +62,7 @@ object NodePipeline {
     def finalizeWindow(ow: OpenWindow): Unit = {
       val eventTime = if (ow.maxTs == 0L) ow.windowStart + windowMs else ow.maxTs
       val aggRow = WindowAggregate(key, ow.sum / ow.count, eventTime)
-      // alert FIRST against the previous baseline (the raw path is shorter
-      // than the SARIMAX path in the reference; see AlertOp ordering note)
+      // alert FIRST against the previous baseline (see the scaladoc)
       AlertOp.check(cfg, aggRow, st.latestBaseline).foreach { a =>
         out += PipelineOutput("alert", key, a.eventTime, alertJson(a))
       }
@@ -111,7 +118,7 @@ object NodePipeline {
     }
   }
 
-  private def alertJson(a: Alert): String = {
+  private[operators] def alertJson(a: Alert): String = {
     import JsonFormat.{esc, num}
     s"""{"node_id": "${esc(a.nodeId)}", "alert_type": "${esc(a.alertType)}", "severity": "${esc(a.severity)}", """ +
       s""""observed_cpu": ${num(a.observedCpu)}, "baseline_cpu": ${num(a.baselineCpu)}, """ +

@@ -49,6 +49,13 @@ class PipelineConfigSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException] {
       PipelineConfig.fromArgs(Seq("--seasonal-order", "0,1,1"))
     }
+    // values the running job would fail on are refused up front
+    Seq(
+      Seq("--emit-every-n", "0"), Seq("--forecast-steps", "0"),
+      Seq("--idle-flush-ms", "0"), Seq("--idle-retention-ms", "-1")).foreach { args =>
+      assertThrows[IllegalArgumentException](PipelineConfig.fromArgs(args))
+    }
+    assertThrows[IllegalArgumentException](PipelineConfig(windowMillis = 0L))
   }
 
   test("unknown flag rejected") {
