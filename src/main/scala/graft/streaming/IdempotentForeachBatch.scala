@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 
 /** Exactly-once `foreachBatch` for sinks WITHOUT built-in transactionality
   * (JDBC, key-value stores, external APIs).
@@ -19,9 +20,10 @@ import org.apache.spark.sql.DataFrame
   * upsert — which is exactly the contract `foreachBatch` sinks need anyway).
   *
   * The ledger lives on the same fault-tolerant storage as the checkpoint
-  * (any Hadoop-API filesystem). One tiny file per batch, O(1) lookup by
-  * name; Spark runs `foreachBatch` bodies serially per query, so there is
-  * no concurrent-marker race within a query.
+  * (any Hadoop-API filesystem) and is written through the session's
+  * checkpoint file manager, like the checkpoint itself. One tiny file per
+  * batch, O(1) lookup by name; Spark runs `foreachBatch` bodies serially per
+  * query, so there is no concurrent-marker race within a query.
   */
 object IdempotentForeachBatch {
 
@@ -32,13 +34,12 @@ object IdempotentForeachBatch {
     (df, batchId) =>
       val spark = df.sparkSession
       val dir = new Path(ledgerDir)
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fm = CheckpointFileManager.create(dir, spark.sessionState.newHadoopConf())
       val marker = new Path(dir, f"committed-$batchId%020d")
-      if (!fs.exists(marker)) {
+      if (!fm.exists(marker)) {
         body(df, batchId)
-        fs.mkdirs(dir)
-        val out = fs.create(marker, false)
-        out.close()
+        fm.mkdirs(dir)
+        fm.createAtomic(marker, overwriteIfPossible = false).close()
       }
   }
 }

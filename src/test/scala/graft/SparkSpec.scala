@@ -2,8 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.GraftSession
+
 /** One shared local session for all suites (sbt runs suites in one JVM;
-  * SparkSession.builder.getOrCreate reuses it).
+  * SparkSession.builder.getOrCreate reuses it). Streaming checkpoints go
+  * through the product's checkpoint file manager, so every streaming spec
+  * exercises it.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
@@ -15,6 +19,7 @@ object SparkSpec {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", s"/tmp/graft-test-warehouse-${java.util.UUID.randomUUID()}")
       .config("spark.ui.enabled", "false")
+      .config(Map(GraftSession.CheckpointFileManagerConf))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -1,12 +1,17 @@
 package graft.streaming
 
+import java.io.File
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
-import graft.core.{PipelineConfig, SarimaxOrder, SeasonalOrder}
+import graft.core.{GraftSession, PipelineConfig, SarimaxOrder, SeasonalOrder}
 import graft.model.{Metric, PipelineOutput}
 import graft.operators.NodePipeline
 
@@ -106,6 +111,92 @@ class CheckpointRecoverySpec extends AnyFunSuite {
         assert(all(4).payload.contains(""""history_size": 5"""), all(4).payload)
       } finally q2.stop()
     } finally spark.conf.set("spark.sql.streaming.stateStore.providerClass", prevProvider)
+  }
+
+  test("a checkpoint written by Spark's default file manager resumes under LocalCheckpointFileManager") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val (managerKey, localManager) = GraftSession.CheckpointFileManagerConf
+    val cfg = PipelineConfig(
+      maxHistory = 20, minHistory = 1, emitEveryN = 1,
+      order = SarimaxOrder(1, 1, 1), seasonalOrder = SeasonalOrder(0, 1, 1, 2),
+      windowMillis = 1000L,
+      idleFlushMillis = Some(600000L))
+    val microBatches = Seq(1 to 3, 4 to 5, 6 to 8).map(_.flatMap(i =>
+      Seq(Metric("node-X", 10.0 * i, i * 1000L + 100L), Metric("node-Y", 100.0 - i, i * 1000L + 500L))))
+
+    def run(checkpoint: String, outDir: String, input: MemoryStream[Metric]): StreamingQuery =
+      NodePipeline(input.toDS(), cfg)
+        .writeStream.format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+        .start()
+    // progress is posted after the batch's commit-log entry
+    def addAndCommit(q: StreamingQuery, input: MemoryStream[Metric], rows: Seq[Metric]): Unit = {
+      val off = input.addData(rows).json
+      pollUntil(s"offset $off committed")(Option(q.lastProgress).exists(_.sources.head.endOffset == off))
+    }
+    def outputs(outDir: String): Seq[PipelineOutput] =
+      spark.read.schema(org.apache.spark.sql.Encoders.product[PipelineOutput].schema).parquet(outDir)
+        .as[PipelineOutput].collect().toSeq.sortBy(o => (o.nodeId, o.eventTime, o.kind, o.payload))
+    def deltaSidecars(state: File): Set[String] = {
+      val all = Files.walk(state.toPath)
+      try all.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".delta.crc")).toSet
+      finally all.close()
+    }
+
+    val prevManager = spark.conf.getOption(managerKey)
+    // one batch per micro-batch of data: the processing-time timeout would
+    // otherwise run no-data batches back to back, and a re-run no-data batch
+    // need not rewrite its state
+    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prevNoData = spark.conf.getOption(noDataKey)
+    spark.conf.set(noDataKey, "false")
+    try {
+      // uninterrupted run, on the product's manager
+      val wantOut = Files.createTempDirectory("graft-xmgr-want-").toString
+      val wantIn = MemoryStream[Metric]
+      val q0 = run(Files.createTempDirectory("graft-xmgr-want-ckpt-").toString, wantOut, wantIn)
+      try microBatches.foreach(addAndCommit(q0, wantIn, _)) finally q0.stop()
+      val want = outputs(wantOut)
+      assert(want.count(_.kind == "baseline") >= 10, want)
+
+      // the first two micro-batches under Spark's default manager
+      val checkpoint = Files.createTempDirectory("graft-xmgr-ckpt-").toFile
+      val outDir = Files.createTempDirectory("graft-xmgr-out-").toString
+      val input = MemoryStream[Metric]
+      spark.conf.set(managerKey, classOf[FileContextBasedCheckpointFileManager].getName)
+      val q1 = run(checkpoint.getPath, outDir, input)
+      try microBatches.take(2).foreach(addAndCommit(q1, input, _)) finally q1.stop()
+
+      // as if the last batch died after its state commit: drop its entries
+      // in the commit log and the sink's log (a sink-committed batch is
+      // skipped without running). The restart runs it again and rewrites its
+      // state deltas over files that carry the default manager's .crc.
+      val commits = new File(checkpoint, "commits")
+      val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+      assert(last == 1L)
+      for (log <- Seq(commits, new File(outDir, "_spark_metadata")); n <- Seq(s"$last", s".$last.crc"))
+        Files.deleteIfExists(new File(log, n).toPath)
+      val rerunDelta = s".${last + 1}.delta.crc"
+      assert(deltaSidecars(new File(checkpoint, "state")).contains(rerunDelta))
+
+      spark.conf.set(managerKey, localManager)
+      val q2 = run(checkpoint.getPath, outDir, input)
+      try {
+        pollUntil(s"batch $last re-committed")(new File(commits, s"$last").exists)
+        addAndCommit(q2, input, microBatches(2))
+      } finally q2.stop()
+
+      // the re-run delta was rewritten by the local manager (its stale
+      // sidecar is gone) and the output equals the uninterrupted run
+      assert(!deltaSidecars(new File(checkpoint, "state")).contains(rerunDelta))
+      assert(outputs(outDir) == want)
+    } finally {
+      prevManager.fold(spark.conf.unset(managerKey))(spark.conf.set(managerKey, _))
+      prevNoData.fold(spark.conf.unset(noDataKey))(spark.conf.set(noDataKey, _))
+    }
   }
 
   test("idle keys are evicted after the retention period (state TTL ladder)") {
