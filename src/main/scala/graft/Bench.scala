@@ -1,8 +1,10 @@
 package graft
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.collection.mutable
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Task-metric tallies for the bench: shuffle bytes written + records read,
   * accumulated across all tasks. Snapshot deltas around a query (with the
@@ -110,8 +112,55 @@ object Bench {
     }
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    val (detail, totals) = suite(spark, sfDir, selected)
+    // sidecar with everything, for humans and the judge; never on the
+    // primary line (a >2000-char line falls off the 2000-char stdout tail
+    // that consumers of the totals line keep, see the class doc).
+    // Path is anchored by SPARK_GRAFT_BENCH_DETAILS when set — the default
+    // lands in the forked JVM's working directory (sbt forks in the project
+    // root, but a caller launching the jar elsewhere should pin the path)
+    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAILS", "BENCH_DETAILS.json")
+    try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
+      detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case e: Throwable => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
+    // round-stamped committed copy next to the overwritten sidecar, so
+    // per-query round-over-round comparison never needs git archaeology
+    // (same JSON; see the Round scaladoc)
+    val stampedPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAILS_STAMPED",
+      java.nio.file.Paths.get(detailPath).resolveSibling(s"BENCH_DETAILS_r$Round.json").toString)
+    try java.nio.file.Files.write(java.nio.file.Paths.get(stampedPath),
+      detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case e: Throwable => System.err.println(s"[bench] stamped detail write failed: ${e.getMessage}") }
+    println(detail)
+    // stop Spark BEFORE the metric line so no shutdown noise can land after
+    // it on stdout — the line must be the last one on stdout
+    try spark.stop()
+    catch { case e: Throwable => System.err.println(s"[bench] stop failed: ${e.getMessage}") }
+    println(totals)
+  }
+
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Times `selected` at `sfDir` (cold pass, steady reps, isolation pass,
+    * probes; see the class doc) and returns the sidecar JSON and the totals
+    * line. A key that throws in any timed run is reported under the
+    * sidecar's `failed` list with its first error and counted in the totals
+    * line's `n_failed`; it is left out of every timing map, median and total,
+    * since the time to a failure is not a measurement of the query.
+    */
+  private[graft] def suite(spark: SparkSession, sfDir: String, selected: Seq[(String, Query)]): (String, String) = {
     val listener = new BenchMetricsListener
     spark.sparkContext.addSparkListener(listener)
+    try suiteWith(spark, sfDir, selected, listener)
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def suiteWith(
+      spark: SparkSession,
+      sfDir: String,
+      selected: Seq[(String, Query)],
+      listener: BenchMetricsListener): (String, String) = {
+    val fnByName = selected.toMap
     // drain + collect BEFORE the timer starts: GC debt accrued by the
     // previous query is paid outside every timed window. DEBT-TRIGGERED
     // (round 16): an unconditional System.gc() costs ~1s on the 16g heap,
@@ -125,15 +174,21 @@ object Bench {
     val benchGc = sys.env.get("SPARK_GRAFT_BENCH_GC").forall(_ != "0")
     var lastRunSec = Double.MaxValue // first run always pays the gc
     var runsSinceGc = 0
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    /** One run of `fn`: its seconds, or its error when it throws. */
+    def timeOnce(name: String, fn: Query): Either[String, Double] = {
       if (benchGc && (lastRunSec >= 0.5 || runsSinceGc >= 16)) {
         org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
         System.gc()
         runsSinceGc = 0
       }
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
+      val error =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+        catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            Some(e.toString)
+        }
       val t = (System.nanoTime() - t0) / 1e9
       // query boundary: release invocation-scoped operator caches so the
       // NEXT timed run computes from its inputs instead of a previous
@@ -142,8 +197,15 @@ object Bench {
       graft.ext.Stage.releaseAll(spark)
       lastRunSec = t
       runsSinceGc += 1
-      t
+      error.toLeft(t)
     }
+    // key -> first error; a failed key is not run again
+    val failed = mutable.LinkedHashMap.empty[String, String]
+    def timeKey(name: String, fn: Query): Option[Double] = timeOnce(name, fn) match {
+      case Right(t) => Some(t)
+      case Left(error) => failed.getOrElseUpdate(name, error); None
+    }
+    def live: Seq[(String, Query)] = selected.filterNot { case (name, _) => failed.contains(name) }
     val steadyReps = sys.env.get("SPARK_GRAFT_STEADY_REPS")
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption).filter(_ >= 1).getOrElse(4)
     // per-pass progress on stderr: a driver-side timeout tail should show
@@ -153,28 +215,28 @@ object Bench {
     def progress(msg: String): Unit =
       System.err.println(f"[bench] $msg (wall ${(System.nanoTime() - wall0) / 1e9}%.0fs)")
     // pass 0: cold, in suite order
-    val cold: Seq[(String, Double)] = selected.map { case (name, fn) => name -> timeOnce(name, fn) }
-    progress(f"cold pass done: ${cold.map(_._2).sum}%.1fs over ${cold.size} keys")
+    val cold: Map[String, Double] = selected.flatMap { case (name, fn) => timeKey(name, fn).map(name -> _) }.toMap
+    progress(f"cold pass done: ${cold.values.sum}%.1fs over ${cold.size} keys, ${failed.size} failed")
     // steady rep 1 also captures the data-movement delta (bytes are
     // plan-deterministic, one capture suffices), with the listener bus
     // drained so task metrics land in the right bucket
-    val rep1: Seq[(String, Double, Long, Long, Long)] = selected.map { case (name, fn) =>
+    val rep1: Map[String, (Double, Long, Long, Long)] = live.flatMap { case (name, fn) =>
       org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
       val (sw0, sr0, in0) =
         (listener.shuffleWrite.get, listener.shuffleRead.get, listener.inputBytes.get)
-      val t = timeOnce(name, fn)
+      val t = timeKey(name, fn)
       org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-      (name, t,
+      t.map(name -> (_,
         listener.shuffleWrite.get - sw0,
         listener.shuffleRead.get - sr0,
-        listener.inputBytes.get - in0)
-    }
+        listener.inputBytes.get - in0))
+    }.toMap
     // steady reps 2..N: whole-suite round-robin (see the class doc)
-    progress(f"steady rep 1 done: ${rep1.map(_._2).sum}%.1fs")
-    val laterReps: Seq[Seq[Double]] =
+    progress(f"steady rep 1 done: ${rep1.values.map(_._1).sum}%.1fs")
+    val laterReps: Seq[Map[String, Double]] =
       (2 to steadyReps).map { r =>
-        val xs = selected.map { case (name, fn) => timeOnce(name, fn) }
-        progress(f"steady rep $r done: ${xs.sum}%.1fs")
+        val xs = live.flatMap { case (name, fn) => timeKey(name, fn).map(name -> _) }.toMap
+        progress(f"steady rep $r done: ${xs.values.sum}%.1fs")
         xs
       }
     // discard-max median: drop the slowest rep (one polluted window per
@@ -193,10 +255,11 @@ object Bench {
       val kept = if (xs.size >= 3) xs.sorted.dropRight(1) else xs.sorted
       if (kept.isEmpty) 0.0 else kept.max - kept.min
     }
-    val interleaved = selected.zipWithIndex.map { case ((name, _), i) =>
-      val reps = rep1(i)._2 +: laterReps.map(_(i))
-      val (_, _, sw, sr, in) = rep1(i)
-      (name, cold(i)._2, steadyMedian(reps), sw, sr, in, steadySpread(reps))
+    // a key still live here succeeded in every pass so far
+    val interleaved = live.map { case (name, _) =>
+      val (t1, sw, sr, in) = rep1(name)
+      val reps = t1 +: laterReps.map(_(name))
+      (name, cold(name), steadyMedian(reps), sw, sr, in, steadySpread(reps))
     }
     // ISOLATION PASS (round-13 fix for the recurring round-11/12 puzzle):
     // the heaviest keys' interleaved reps share their timed windows with
@@ -260,8 +323,8 @@ object Bench {
     val isoBudgetSec = sys.env.get("SPARK_GRAFT_BENCH_ISO_BUDGET")
       .flatMap(s => scala.util.Try(s.trim.toDouble).toOption).filter(_ > 0).getOrElse(300.0)
     val isoDeadline = System.nanoTime() + (isoBudgetSec * 1e9).toLong
-    def isolatedReps(name: String, prior: Double): Seq[Double] = {
-      val fn = SparkEntry.queries(name)
+    def isolatedReps(name: String, prior: Double): Option[Seq[Double]] = {
+      val fn = fnByName(name)
       val accepted = scala.collection.mutable.ArrayBuffer.empty[Double]
       def runningMedian(): Double =
         if (accepted.isEmpty) prior
@@ -270,19 +333,20 @@ object Bench {
         // 0.5s floor: sub-second keys legitimately jitter past 3x on
         // scheduler granularity alone; the guard targets multi-second stalls
         val limit = 3.0 * math.max(runningMedian(), 0.5)
-        var attempt = timeOnce(name, fn)
-        var retries = 0
-        var best = attempt
-        while (attempt > limit && retries < 2 && System.nanoTime() < isoDeadline) {
-          System.err.println(
-            f"[bench] $name isolated rep $attempt%.3fs > 3x median ${limit / 3.0}%.3fs — discarding as pollution, re-running (retry ${retries + 1}/2)")
-          attempt = timeOnce(name, fn)
-          best = math.min(best, attempt)
-          retries += 1
+        if (!failed.contains(name)) timeKey(name, fn).foreach { first =>
+          var attempt = first
+          var retries = 0
+          var best = attempt
+          while (attempt > limit && retries < 2 && System.nanoTime() < isoDeadline && !failed.contains(name)) {
+            System.err.println(
+              f"[bench] $name isolated rep $attempt%.3fs > 3x median ${limit / 3.0}%.3fs — discarding as pollution, re-running (retry ${retries + 1}/2)")
+            timeKey(name, fn).foreach { t => attempt = t; best = math.min(best, t) }
+            retries += 1
+          }
+          accepted += best
         }
-        accepted += math.min(best, attempt)
       }
-      accepted.toSeq
+      if (failed.contains(name)) None else Some(accepted.toSeq)
     }
     val isolationSkipped = scala.collection.mutable.ArrayBuffer.empty[String]
     val interleavedByName = interleaved.map(r => r._1 -> r).toMap
@@ -293,8 +357,7 @@ object Bench {
         isolationSkipped += name
         None
       } else {
-        val reps = isolatedReps(name, interleavedByName(name)._3)
-        Some(name -> (steadyMedian(reps), steadySpread(reps)))
+        isolatedReps(name, interleavedByName(name)._3).map(reps => name -> (steadyMedian(reps), steadySpread(reps)))
       }
     }.toMap
     progress(s"isolation pass done: ${isoResults.size} keys re-run, ${isolationSkipped.size} skipped")
@@ -309,7 +372,7 @@ object Bench {
     // is unaffected: both passes' medians and spreads stay in the sidecar
     // (`queries_interleaved{,_spread}`, `isolated`), and a genuine stall
     // still surfaces as interleaved spread >> median.
-    val results = interleaved.map { case r @ (name, c, im, sw, sr, in, isp) =>
+    val results = interleaved.filterNot(r => failed.contains(r._1)).map { case r @ (name, c, im, sw, sr, in, isp) =>
       isoResults.get(name) match {
         case Some((m, sp)) if m < im => (name, c, m, sw, sr, in, sp)
         case Some(_) => r
@@ -398,14 +461,11 @@ object Bench {
       if (scaleDir == sfDir || !java.nio.file.Files.isDirectory(java.nio.file.Paths.get(scaleDir)))
         Seq.empty
       else results.sortBy(-_._3).take(8).flatMap { case (name, _, steady, _, _, _, _) =>
-        try {
-          val fn = SparkEntry.queries(name)
-          timeOnce(name, (s, _) => fn(s, scaleDir)) // warm-up at the probe scale
-          val small = timeOnce(name, (s, _) => fn(s, scaleDir))
-          if (small > 0) Some(name -> steady / small) else None
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name scale probe failed: ${e.getMessage}"); None
+        val fn = fnByName(name)
+        timeOnce(name, (s, _) => fn(s, scaleDir)) // warm-up at the probe scale
+        timeOnce(name, (s, _) => fn(s, scaleDir)) match {
+          case Right(small) if small > 0 => Some(name -> steady / small)
+          case _ => None // a failure is on stderr from timeOnce
         }
       }
     // recall floor context: the bench embeddings are STRUCTURELESS (i.i.d.
@@ -454,36 +514,19 @@ object Bench {
           else s""""suite_pressure_keys":[${pressure.sorted.map("\"" + _ + "\"").mkString(",")}],"""
         s""""isolated":[${names.map("\"" + _ + "\"").mkString(",")}],$skipped$pressureJson"queries_interleaved":$il,"queries_interleaved_spread":$ilSp,"""
       }
+    val failedJson = failed.toSeq
+      .map { case (k, e) => s"""{"key":"${graft.model.JsonFormat.esc(k)}","error":"${graft.model.JsonFormat.esc(e)}"}""" }
+      .mkString("[", ",", "]")
     val detail =
-      s"""{"detail":"per-query","steady_reps":$steadyReps,$isolatedJson"queries":$warmQs,"queries_spread":$spreadQs,"queries_cold":$coldQs,"queries_shuffle_write_bytes":$shuffleQs,"queries_shuffle_read_bytes":$readQs,"queries_input_bytes":$inputQs,$recallJson$scaleJson"sf":"$sfDir"}"""
-    // sidecar with everything, for humans and the judge; never on the
-    // primary line (a >2000-char line falls off the driver's stdout tail).
-    // Path is anchored by SPARK_GRAFT_BENCH_DETAILS when set — the default
-    // lands in the forked JVM's working directory (sbt forks in the project
-    // root, but a caller launching the jar elsewhere should pin the path)
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAILS", "BENCH_DETAILS.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
-      detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
-    // round-stamped committed copy next to the overwritten sidecar, so
-    // per-query round-over-round comparison never needs git archaeology
-    // (same JSON; see the Round scaladoc)
-    val stampedPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAILS_STAMPED",
-      java.nio.file.Paths.get(detailPath).resolveSibling(s"BENCH_DETAILS_r$Round.json").toString)
-    try java.nio.file.Files.write(java.nio.file.Paths.get(stampedPath),
-      detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable => System.err.println(s"[bench] stamped detail write failed: ${e.getMessage}") }
-    println(detail)
-    // stop Spark BEFORE the metric line so no shutdown noise can land after
-    // it on stdout — the line must be the last one the driver sees
-    try spark.stop()
-    catch { case e: Throwable => System.err.println(s"[bench] stop failed: ${e.getMessage}") }
+      s"""{"detail":"per-query","steady_reps":$steadyReps,$isolatedJson"queries":$warmQs,"queries_spread":$spreadQs,"queries_cold":$coldQs,"queries_shuffle_write_bytes":$shuffleQs,"queries_shuffle_read_bytes":$readQs,"queries_input_bytes":$inputQs,$recallJson$scaleJson"failed":$failedJson,"sf":"$sfDir"}"""
     // the ONE machine-parsed line — compact (immune to query-surface
     // growth: no per-query map, see the class doc), and LAST. `slowest`
     // carries the 8 slowest steady queries so the cross-round watch list
     // survives even if the sidecar is lost.
     val slowest = jsonMap(
       results.sortBy(-_._3).take(8).map { case (k, _, w, _, _, _, _) => k -> r3(w) })
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","mode":"steady-discardmax-median-of-$steadyReps","n_queries":${results.size},"total_cold":${r3(totalCold)},"shuffle_write_bytes":$totalShuffle,"shuffle_read_bytes":$totalShuffleRead,"input_bytes":$totalInput,"slowest":$slowest,"details":"BENCH_DETAILS.json","sf":"$sfDir"}""")
+    val totals =
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","mode":"steady-discardmax-median-of-$steadyReps","n_queries":${results.size},"n_failed":${failed.size},"total_cold":${r3(totalCold)},"shuffle_write_bytes":$totalShuffle,"shuffle_read_bytes":$totalShuffleRead,"input_bytes":$totalInput,"slowest":$slowest,"details":"BENCH_DETAILS.json","sf":"$sfDir"}"""
+    (detail, totals)
   }
 }

@@ -38,9 +38,17 @@ final case class PipelineConfig(
   // each of these would only fail once the stream runs: a zero emit cadence
   // or window width divides by zero in the operator and kills the query, a
   // non-positive timeout is refused by GroupState on the first batch, and a
-  // zero-step forecast fails every fit, so no baseline is ever emitted
+  // zero-step forecast, an empty history, a lag-0 season or a negative order
+  // fails every fit (or never fits), so no baseline is ever emitted. Checks
+  // stay single-field: fromArgs builds the config one flag at a time, so a
+  // cross-field check (minHistory <= maxHistory) would depend on flag order.
   require(emitEveryN >= 1, s"emitEveryN must be >= 1, got $emitEveryN")
   require(forecastSteps >= 1, s"forecastSteps must be >= 1, got $forecastSteps")
+  require(maxHistory >= 1, s"maxHistory must be >= 1, got $maxHistory")
+  require(seasonalOrder.s >= 1, s"seasonal period s must be >= 1, got ${seasonalOrder.s}")
+  require(Seq(order.p, order.d, order.q).forall(_ >= 0), s"order components must be >= 0, got $order")
+  require(Seq(seasonalOrder.bigP, seasonalOrder.bigD, seasonalOrder.bigQ).forall(_ >= 0),
+    s"seasonal order components must be >= 0, got $seasonalOrder")
   require(windowMillis > 0, s"windowMillis must be > 0, got $windowMillis")
   require(idleFlushMillis.forall(_ > 0), s"idleFlushMillis must be > 0, got $idleFlushMillis")
   require(idleRetentionMillis.forall(_ > 0), s"idleRetentionMillis must be > 0, got $idleRetentionMillis")

@@ -1,5 +1,14 @@
 package graft.model
 
+import java.nio.{BufferUnderflowException, ByteBuffer}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.reflect.classTag
+
+import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders.{BinaryEncoder, TransformingEncoder}
+import org.apache.spark.sql.catalyst.encoders.Codec
+
 /** Core data model of the pipeline.
   *
   * Mirrors the reference's row shapes (see /root/reference/src/flinkarima.py):
@@ -123,4 +132,124 @@ final case class NodePipelineState(
 
 object NodePipelineState {
   val empty: NodePipelineState = NodePipelineState(None, NodeState.empty, None)
+
+  /** State encoder of [[graft.operators.NodePipeline]]: the whole state is
+    * one binary column written by [[BinaryCodec]] (the mechanism
+    * `Encoders.kryo` uses). Spark's product encoder would store a nested
+    * struct, regenerate its serializer and deserializer code in every task
+    * of every trigger, and decode both histories element by element, twice
+    * per key and trigger (the processing-time timeout scan decodes every
+    * key's state to read its timeout).
+    */
+  val encoder: Encoder[NodePipelineState] =
+    TransformingEncoder(classTag[NodePipelineState], BinaryEncoder, () => BinaryCodec)
+
+  /** Versioned binary form of a [[NodePipelineState]]. Layout of version 1,
+    * big-endian: the version byte, then the fields in declaration order.
+    * An `Option` is a flag byte (0 or 1) followed by its value when 1, a
+    * history an `Int` length followed by its raw doubles (bit for bit), a
+    * `String` an `Int` byte length followed by its UTF-8 bytes. Decoding
+    * refuses any other version and any byte left over or missing, so a
+    * field added to the state cannot be read from or into an old payload:
+    * it needs a new version here.
+    */
+  object BinaryCodec extends Codec[NodePipelineState, Array[Byte]] {
+    val Version: Byte = 1
+
+    def encode(st: NodePipelineState): Array[Byte] = {
+      val n = st.node
+      val nodeId = st.latestBaseline.map(_.nodeId.getBytes(UTF_8))
+      def optSize[A](o: Option[A])(size: A => Int): Int = 1 + o.fold(0)(size)
+      // version; open window (4 x 8); two length-prefixed histories;
+      // emitCounter, count, mean, m2 (4 + 3 x 8); latest baseline (id length
+      // and bytes, 44 bytes of fixed fields, two optional doubles); closedThrough
+      val size = 1 + optSize(st.open)(_ => 32) +
+        8 + 8 * (n.history.length + n.rawHistory.length) + 28 +
+        optSize(st.latestBaseline)(b =>
+          4 + nodeId.get.length + 44 + optSize(b.dailyAvgLatest)(_ => 8) + optSize(b.dailyAvgLast5)(_ => 8)) +
+        8
+      val buf = ByteBuffer.allocate(size)
+      buf.put(Version)
+      putOpt(buf, st.open) { ow =>
+        buf.putLong(ow.windowStart).putDouble(ow.sum).putLong(ow.count).putLong(ow.maxTs)
+      }
+      putDoubles(buf, n.history)
+      putDoubles(buf, n.rawHistory)
+      buf.putInt(n.emitCounter).putLong(n.count).putDouble(n.mean).putDouble(n.m2)
+      putOpt(buf, st.latestBaseline) { b =>
+        val id = nodeId.get
+        buf.putInt(id.length).put(id)
+        buf.putDouble(b.observedCpu).putDouble(b.baselineCpu).putInt(b.historySize).putLong(b.eventTime)
+          .putDouble(b.runningMean).putDouble(b.runningStd)
+        putOpt(buf, b.dailyAvgLatest)(buf.putDouble)
+        putOpt(buf, b.dailyAvgLast5)(buf.putDouble)
+      }
+      buf.putLong(st.closedThrough)
+      buf.array()
+    }
+
+    def decode(bytes: Array[Byte]): NodePipelineState = {
+      val buf = ByteBuffer.wrap(bytes)
+      val st =
+        try {
+          val version = buf.get()
+          if (version != Version)
+            throw new IllegalStateException(
+              s"unknown NodePipelineState version $version (this build reads version $Version); " +
+                "a checkpoint written by another version cannot be resumed")
+          val open = getOpt(buf)(OpenWindow(buf.getLong(), buf.getDouble(), buf.getLong(), buf.getLong()))
+          val node = NodeState(getDoubles(buf), getDoubles(buf), buf.getInt(), buf.getLong(), buf.getDouble(),
+            buf.getDouble())
+          val latest = getOpt(buf) {
+            val id = new Array[Byte](getLength(buf, 1))
+            buf.get(id)
+            Baseline(new String(id, UTF_8), buf.getDouble(), buf.getDouble(), buf.getInt(), buf.getLong(),
+              buf.getDouble(), buf.getDouble(), getOpt(buf)(buf.getDouble()), getOpt(buf)(buf.getDouble()))
+          }
+          NodePipelineState(open, node, latest, buf.getLong())
+        } catch {
+          case _: BufferUnderflowException =>
+            throw new IllegalStateException(s"truncated NodePipelineState payload: ${bytes.length} bytes")
+        }
+      if (buf.hasRemaining)
+        throw new IllegalStateException(
+          s"NodePipelineState payload has ${buf.remaining} trailing bytes after ${buf.position()} decoded")
+      st
+    }
+
+    private def putOpt[A](buf: ByteBuffer, o: Option[A])(put: A => Any): Unit = o match {
+      case Some(a) => buf.put(1.toByte); put(a)
+      case None => buf.put(0.toByte)
+    }
+
+    private def getOpt[A](buf: ByteBuffer)(get: => A): Option[A] = buf.get() match {
+      case 0 => None
+      case 1 => Some(get)
+      case f => throw new IllegalStateException(s"bad Option flag $f at byte ${buf.position() - 1}")
+    }
+
+    private def putDoubles(buf: ByteBuffer, xs: Vector[Double]): Unit = {
+      buf.putInt(xs.length)
+      xs.foreach(buf.putDouble)
+    }
+
+    /** A length prefix, checked against what is left of the payload. */
+    private def getLength(buf: ByteBuffer, elementBytes: Int): Int = {
+      val n = buf.getInt()
+      if (n < 0) throw new IllegalStateException(s"negative length $n at byte ${buf.position() - 4}")
+      if (elementBytes.toLong * n > buf.remaining)
+        throw new IllegalStateException(
+          s"truncated NodePipelineState payload: $n elements of $elementBytes bytes, ${buf.remaining} bytes left")
+      n
+    }
+
+    private def getDoubles(buf: ByteBuffer): Vector[Double] = {
+      val n = getLength(buf, 8)
+      val b = Vector.newBuilder[Double]
+      b.sizeHint(n)
+      var i = 0
+      while (i < n) { b += buf.getDouble(); i += 1 }
+      b.result()
+    }
+  }
 }

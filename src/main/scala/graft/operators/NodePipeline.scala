@@ -41,6 +41,15 @@ import graft.model._
   * exactly the case alerting exists for). Records at or before an already
   * finalized window are dropped. A micro-batch's records are taken in
   * event-time order (the reference takes arrival order; SURVEY §7.4.2).
+  *
+  * State encoding: the state store holds each key's [[NodePipelineState]] as
+  * one versioned binary column ([[NodePipelineState.encoder]]), not as
+  * Spark's nested struct. With the struct, every task of every trigger
+  * regenerated the state serializer and deserializer code, and each key's
+  * two histories were decoded element by element twice per trigger (once
+  * more by the processing-time timeout scan, which reads every key's state).
+  * Checkpoints written with the struct encoding fail Spark's state schema
+  * check on restart; they cannot be resumed.
   */
 object NodePipeline {
 
@@ -48,7 +57,8 @@ object NodePipeline {
     import metrics.sparkSession.implicits._
     metrics
       .groupByKey(_.nodeId)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout())(processGroup(cfg) _)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout())(processGroup(cfg) _)(
+        NodePipelineState.encoder, newProductEncoder[PipelineOutput])
   }
 
   def processGroup(cfg: PipelineConfig)(

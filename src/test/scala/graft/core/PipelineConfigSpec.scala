@@ -52,7 +52,13 @@ class PipelineConfigSpec extends AnyFunSuite {
     // values the running job would fail on are refused up front
     Seq(
       Seq("--emit-every-n", "0"), Seq("--forecast-steps", "0"),
-      Seq("--idle-flush-ms", "0"), Seq("--idle-retention-ms", "-1")).foreach { args =>
+      Seq("--idle-flush-ms", "0"), Seq("--idle-retention-ms", "-1"),
+      // an always-empty history and a lag-0 seasonal difference never
+      // produce a baseline; negative orders are not a model
+      Seq("--max-history", "0"), Seq("--seasonal-order", "0,1,1,0"),
+      Seq("--order", "-1,1,1"), Seq("--order", "1,-1,1"), Seq("--order", "1,1,-1"),
+      Seq("--seasonal-order", "-1,1,1,4"), Seq("--seasonal-order", "0,-1,1,4"),
+      Seq("--seasonal-order", "0,1,-1,4")).foreach { args =>
       assertThrows[IllegalArgumentException](PipelineConfig.fromArgs(args))
     }
     assertThrows[IllegalArgumentException](PipelineConfig(windowMillis = 0L))

@@ -5,14 +5,15 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, StreamingQueryException}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 import graft.core.{GraftSession, PipelineConfig, SarimaxOrder, SeasonalOrder}
-import graft.model.{Metric, PipelineOutput}
+import graft.model.{Metric, NodePipelineState, PipelineOutput}
 import graft.operators.NodePipeline
 
 /** O13 exercised, not just asserted: stop the fused pipeline mid-stream and
@@ -31,6 +32,18 @@ class CheckpointRecoverySpec extends AnyFunSuite {
     val deadline = System.currentTimeMillis + timeoutMs
     while (System.currentTimeMillis < deadline && !pred) Thread.sleep(150)
     assert(pred, s"timed out waiting for: $what")
+  }
+
+  // progress is posted after the batch's commit-log entry
+  private def addAndCommit(q: StreamingQuery, input: MemoryStream[Metric], rows: Seq[Metric]): Unit = {
+    val off = input.addData(rows).json
+    pollUntil(s"offset $off committed")(Option(q.lastProgress).exists(_.sources.head.endOffset == off))
+  }
+
+  private def outputs(outDir: String): Seq[PipelineOutput] = {
+    import spark.implicits._
+    spark.read.schema(Encoders.product[PipelineOutput].schema).parquet(outDir)
+      .as[PipelineOutput].collect().toSeq.sortBy(o => (o.nodeId, o.eventTime, o.kind, o.payload))
   }
 
   test("restart from checkpoint resumes window + baseline state (RocksDB)") {
@@ -132,14 +145,6 @@ class CheckpointRecoverySpec extends AnyFunSuite {
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
         .start()
-    // progress is posted after the batch's commit-log entry
-    def addAndCommit(q: StreamingQuery, input: MemoryStream[Metric], rows: Seq[Metric]): Unit = {
-      val off = input.addData(rows).json
-      pollUntil(s"offset $off committed")(Option(q.lastProgress).exists(_.sources.head.endOffset == off))
-    }
-    def outputs(outDir: String): Seq[PipelineOutput] =
-      spark.read.schema(org.apache.spark.sql.Encoders.product[PipelineOutput].schema).parquet(outDir)
-        .as[PipelineOutput].collect().toSeq.sortBy(o => (o.nodeId, o.eventTime, o.kind, o.payload))
     def deltaSidecars(state: File): Set[String] = {
       val all = Files.walk(state.toPath)
       try all.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".delta.crc")).toSet
@@ -197,6 +202,47 @@ class CheckpointRecoverySpec extends AnyFunSuite {
       prevManager.fold(spark.conf.unset(managerKey))(spark.conf.set(managerKey, _))
       prevNoData.fold(spark.conf.unset(noDataKey))(spark.conf.set(noDataKey, _))
     }
+  }
+
+  test("a checkpoint of the struct-encoded state fails loudly instead of resuming") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val cfg = PipelineConfig(
+      maxHistory = 20, minHistory = 1, emitEveryN = 1,
+      order = SarimaxOrder(1, 1, 1), seasonalOrder = SeasonalOrder(0, 1, 1, 2),
+      windowMillis = 1000L,
+      idleFlushMillis = Some(600000L))
+    def batch(is: Range) = is.map(i => Metric("node-O", 10.0 * i, i * 1000L + 100L))
+    val checkpoint = Files.createTempDirectory("graft-oldstate-ckpt-").toString
+    val outDir = Files.createTempDirectory("graft-oldstate-out-").toString
+    val input = MemoryStream[Metric]
+    def start(out: Dataset[PipelineOutput]): StreamingQuery =
+      out.writeStream.format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+        .start()
+
+    // the same operator with the state stored as Spark's nested struct, as
+    // checkpoints written before the binary state column have it
+    val q1 = start(input.toDS().groupByKey(_.nodeId)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout())(
+        NodePipeline.processGroup(cfg) _)(Encoders.product[NodePipelineState], Encoders.product[PipelineOutput]))
+    try Seq(batch(1 to 3), batch(4 to 5)).foreach(addAndCommit(q1, input, _)) finally q1.stop()
+    val before = outputs(outDir)
+    assert(before.count(_.kind == "baseline") >= 3, before)
+
+    val q2 = start(NodePipeline(input.toDS(), cfg))
+    val err =
+      try {
+        input.addData(batch(6 to 8))
+        intercept[StreamingQueryException](q2.awaitTermination(60000L))
+      } finally q2.stop()
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(causes.exists(m => m != null && (m.contains("schema") || m.contains("NodePipelineState version"))),
+      causes.mkString("\n"))
+    // failed before its sink committed a row
+    assert(outputs(outDir) == before)
   }
 
   test("idle keys are evicted after the retention period (state TTL ladder)") {
